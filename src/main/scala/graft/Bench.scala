@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line with per-query seconds.
   *
-  * Measurement protocol (each query, in declaration order):
+  * Measurement protocol (each query, in [[SparkEntry.gates]] order —
+  * dedup_keep_best is declared before q_delete_propagate, so it is the
+  * one that pays the first-use cluster-table build):
   *   1. one untimed warmup pass over all queries (JIT + codegen
   *      compilation + parquet footer caching — none of which a
   *      long-running cluster pays per query), then `clearCache()`;
@@ -40,23 +40,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // local-iteration dial: comma-separated query names to bench alone
     // (unset — the driver's case — means the full declared suite)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    def selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.gates.filter(g => only.forall(_(g.name)))
+    val spark = GraftSession()
 
     // r15 (verdict "What's wrong" #1): the fingerprint-keyed dedup
     // cluster tables let derivation done OUTSIDE the timed region —
@@ -73,8 +62,8 @@ object Bench {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
     dropClusterTables()
 
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count()
+    selected.foreach { g =>
+      try g.run(spark, sfDir).count()
       catch { case e: Throwable =>
         System.err.println(s"[bench-warmup] ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
@@ -87,8 +76,8 @@ object Bench {
     // but with the derivation paid inside the measured run.
     dropClusterTables()
 
-    val results: Seq[(String, QueryResult)] = selected.toSeq.map {
-      case (name, fn) =>
+    val results: Seq[(String, QueryResult)] = selected.map {
+      case Gate(name, fn, _) =>
         var rows = -1L
         var err: Option[String] = None
         def oneRep(): Option[Double] = {
@@ -167,16 +156,14 @@ object Bench {
     // from BENCH_r08..r14's stored tails) tail of the run's output.
     // With 196 queries the line is ~5 KB — the query NAMES alone are
     // ~3.2 KB — so no complete copy can ever sit inside the tail and
-    // `parsed` has been null since r08. Best effort (r14 verdict item
-    // 1): print it twice (first and last, so a larger future tail
-    // window parses it) and persist the IDENTICAL line as
-    // BENCH_SUMMARY.json next to BENCH_DETAIL.json, where the judge
-    // and any file-reading driver can pick it up intact.
+    // `parsed` has been null since r08. So the IDENTICAL line is also
+    // persisted as BENCH_SUMMARY.json next to BENCH_DETAIL.json, where
+    // any file-reading consumer can pick it up intact; stdout carries
+    // it once, as the last line, after the session has stopped.
     val summaryPath = java.nio.file.Paths.get(
       sys.props.getOrElse("bench.summary.path", "BENCH_SUMMARY.json")).toAbsolutePath
     java.nio.file.Files.write(summaryPath, (summaryLine + "\n").getBytes("UTF-8"))
     System.err.println(s"[bench] summary written to $summaryPath")
-    println(summaryLine)
     spark.stop()
     println(summaryLine)
   }

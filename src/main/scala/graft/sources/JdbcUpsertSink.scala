@@ -111,7 +111,12 @@ object JdbcUpsertSink {
     s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
 
   /** Executor-side writer: one connection + one prepared statement per
-    * partition, addBatch/executeBatch every `batchSize` rows. */
+    * partition, addBatch/executeBatch every `batchSize` rows, one
+    * transaction per partition. A failure rolls the transaction back
+    * before the connection closes — closing with it still open throws
+    * (Derby: SQLState 25001), which would hide the real error and
+    * leave the partition's row locks held — then rethrows the
+    * original error. */
   def writePartition(rows: Iterator[Row], sql: String, cols: Seq[String],
                      connect: () => Connection, batchSize: Int = 500): Unit = {
     val conn = connect()
@@ -129,7 +134,13 @@ object JdbcUpsertSink {
       }
       st.executeBatch()
       conn.commit()
-    } finally conn.close()
+    } catch {
+      case e: Throwable =>
+        try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+        try conn.close() catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
+    conn.close()
   }
 
   /** Dataset-level plain batched insert (the delete-then-insert

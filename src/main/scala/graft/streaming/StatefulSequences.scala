@@ -86,18 +86,16 @@ object StatefulSequences {
     val out = ListBuffer[Example]()
     implicit val evEnc = Encoders.product[Ev]
     val input = MemoryStream[Ev]
-    val q = StateStores.withProvider(spark) {
-      examples(input.toDS())
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Example], _: Long) =>
-          // harness-side collect: draining one micro-batch's OUTPUT rows
-          val rows = batch.collect()
-          out.synchronized { out ++= rows }
-          ()
-        }
-        .start()
-    }
+    val q = examples(input.toDS())
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Example], _: Long) =>
+        // harness-side collect: draining one micro-batch's OUTPUT rows
+        val rows = batch.collect()
+        out.synchronized { out ++= rows }
+        ()
+      }
+      .start()
     try {
       feed.grouped(math.max(1, (feed.size + nChunks - 1) / nChunks))
         .foreach { chunk => input.addData(chunk); q.processAllAvailable() }

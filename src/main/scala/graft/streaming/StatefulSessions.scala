@@ -142,11 +142,9 @@ object StatefulSessions {
       .as[SessionEvent]
     val sink = "stream_sessions_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StateStores.withProvider(spark) {
-      sessionize(withTime)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-    }
+    val q = sessionize(withTime)
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("append").start()
     try {
       input.addData(evs.toIndexedSeq)
       q.processAllAvailable()

@@ -68,6 +68,35 @@ class JdbcExecutedUpsertSpec extends SparkSpec {
     assert(got.map(_._2) == List(1L, 2L, 3L))
   }
 
+  test("a failed batch rolls back: the database error surfaces and the table stays readable") {
+    import spark.implicits._
+    val dupUrl = "jdbc:derby:memory:graftrollback;create=true"
+    val c = DriverManager.getConnection(dupUrl)
+    c.createStatement().execute("CREATE TABLE dup_target (k BIGINT PRIMARY KEY, v BIGINT)")
+    // a lock left by an open transaction fails the read below in 2 s,
+    // not Derby's default 60
+    c.createStatement().execute(
+      "CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY('derby.locks.waitTimeout', '2')")
+    c.close()
+
+    // one partition whose third row repeats the first row's key
+    val rows = Seq((1L, 10L), (2L, 20L), (1L, 30L)).toDF("k", "v").coalesce(1)
+    val err = intercept[Exception] {
+      JdbcUpsertSink.insert(rows, dupUrl, "dup_target", Seq("k", "v"))
+    }
+    val states = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collect { case e: java.sql.SQLException => e.getSQLState }.toList
+    assert(states.contains("23505"), s"duplicate-key error not surfaced: $states")
+    assert(!states.contains("25001"), s"close-with-open-transaction error: $states")
+
+    val r = DriverManager.getConnection(dupUrl)
+    try {
+      val rs = r.createStatement().executeQuery("SELECT COUNT(*) FROM dup_target")
+      rs.next()
+      assert(rs.getLong(1) == 0L, "rows of the failed partition were kept")
+    } finally r.close()
+  }
+
   test("MySQL dialect still generates ON DUPLICATE KEY statements") {
     val add = JdbcUpsertSink.statement("t", Seq("k"), Seq("v"),
       Additive, JdbcUpsertSink.MySqlDialect)
